@@ -42,14 +42,6 @@ def exact_dedup(
     )
 
 
-def exact_dup_stats(df: DataFrame, content_col: str = "text") -> DataFrame:
-    return df.agg(
-        F.count("*").alias("n_docs"),
-        F.countDistinct(F.md5(F.col(content_col))).alias("n_unique"),
-        (F.count("*") - F.countDistinct(F.md5(F.col(content_col)))).alias("n_dups"),
-    )
-
-
 def exact_dedup_incremental(
     new_docs: DataFrame,
     seen: DataFrame,

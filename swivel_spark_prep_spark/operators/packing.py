@@ -9,11 +9,14 @@ straddle a boundary (that is the point: zero padding waste).
 
 Scale design: the only non-trivial step is the exclusive prefix sum of
 token counts in document order. A naive `SUM() OVER (ORDER BY ...)` is a
-single-task global window; instead this uses the same two-pass scheme as
-swivel.assign_ids — range-partition by the order column, partition-local
-prefix sums in parallel, then add per-partition offsets computed from the
-partition TOTALS (a driver-side cumsum over #partitions numbers, never
-data). Identical results, no single-task stage.
+single-task global window; instead this calls operators/ranks.py's
+two-pass kernel (the one swivel.assign_ids also rides) — range-partition
+by the order column, partition-local prefix sums in parallel, then
+per-partition offsets from a window over the partition TOTALS, broadcast
+back. The kernel persists its partition-tagged relation once, which fixes
+each row's partition id; the result is valid until
+``cache.release_persisted()``, so fetch or write it first. Identical
+results, no single-task stage, no driver collect.
 """
 
 from __future__ import annotations

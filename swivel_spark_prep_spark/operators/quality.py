@@ -1398,14 +1398,17 @@ def holm_adjust(
     distinct-p relation), so every member of a tied block shares the
     largest factor (m − j + 1) — conservative and independent of any
     arbitrary tie order; the running max is an inclusive prefix max in
-    distinct-p order. Both prefixes ride partitioned_prefix_sum /
-    the same range-partitioned pass — no single-task window, no
-    triangular join. Input rows pass through with (m_tests,
-    p_holm, rejected) appended; NULL p is never rejected.
+    distinct-p order. Both prefixes are operators/ranks.py's two-pass
+    kernel (its sum and max forms) — no single-task window, no
+    triangular join, no driver collect. Input rows pass through with
+    (m_tests, p_holm, rejected) appended; NULL p is never rejected.
     """
     if not 0.0 < alpha < 1.0:
         raise ValueError(f"alpha must be in (0, 1), got {alpha}")
-    from swivel_spark_prep_spark.operators.ranks import partitioned_prefix_sum
+    from swivel_spark_prep_spark.operators.ranks import (
+        partitioned_prefix_extremum,
+        partitioned_prefix_sum,
+    )
 
     dp = (
         df.select(F.col(p_col).cast("double").alias("_pd"))
@@ -1423,9 +1426,10 @@ def holm_adjust(
         ).alias("_step"),
     )
     # the step-down envelope is an inclusive prefix MAX in distinct-p
-    # order — _prefix_max below is the prefix-sum two-pass scheme with
-    # max in place of sum (driver-side carry over #partitions scalars)
-    env = _prefix_max(stepped, "_pd", "_step", "_holm")
+    # order — the same ranks kernel in its max form
+    env = partitioned_prefix_extremum(
+        stepped, ["_pd"], "_step", "_holm", inclusive=True
+    )
     out = df.crossJoin(F.broadcast(m.select(F.col("_m").cast("long").alias("m_tests"))))
     j = out.join(
         env.select(F.col("_pd").alias(p_col + "__k"), "_holm"),
@@ -1437,62 +1441,6 @@ def holm_adjust(
         "m_tests",
         F.round("_holm", 6).alias("p_holm"),
         F.coalesce(F.col("_holm") <= alpha, F.lit(False)).alias("rejected"),
-    )
-
-
-def _prefix_max(df: DataFrame, order_col: str, value_col: str, out_col: str) -> DataFrame:
-    """Inclusive running MAX over a total order without a global
-    single-partition window: range-partition by the order column, take
-    the local running max per partition, then add the cross-partition
-    carry — computed DRIVER-SIDE over #partitions scalars (never data),
-    the exact scheme ranks.partitioned_prefix_sum uses for its sums, so
-    the plan carries no unpartitioned window and no single-task stage.
-    """
-    from swivel_spark_prep_spark.cache import track_persist
-
-    spark = df.sparkSession
-    n_part = max(
-        int(spark.conf.get("spark.sql.shuffle.partitions", "200")),
-        spark.sparkContext.defaultParallelism,
-        2,
-    )
-    ranged = df.repartitionByRange(n_part, order_col).sortWithinPartitions(
-        order_col
-    )
-    with_pid = track_persist(ranged.withColumn("_pid", F.spark_partition_id()))
-    w_local = (
-        Window.partitionBy("_pid")
-        .orderBy(order_col)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    local = with_pid.withColumn("_lmax", F.max(value_col).over(w_local))
-    # cross-partition carry: max over all EARLIER partitions' maxima —
-    # #partitions numbers folded on the driver (control plane, not data)
-    heads = {
-        r["_pid"]: r["_pmax"]
-        for r in with_pid.groupBy("_pid")
-        .agg(F.max(value_col).alias("_pmax"))
-        .collect()
-    }
-    carries, acc = {}, None
-    for pid in sorted(heads):
-        carries[pid] = acc
-        v = heads[pid]
-        acc = v if acc is None or (v is not None and v > acc) else acc
-    carry_expr = F.coalesce(
-        *[
-            F.when(F.col("_pid") == p, F.lit(c))
-            for p, c in carries.items()
-            if c is not None
-        ]
-        or [F.lit(None).cast("double")],
-        F.lit(None).cast("double"),
-    )
-    return (
-        local.withColumn(
-            out_col, F.greatest(F.col("_lmax"), F.coalesce(carry_expr, F.col("_lmax")))
-        )
-        .drop("_pid", "_lmax", value_col)
     )
 
 

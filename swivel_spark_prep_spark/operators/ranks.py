@@ -1,31 +1,46 @@
-"""Scale-safe ordered prefix sums — the public primitive behind every
-"running total over a globally-ordered relation" in this engine.
+"""Scale-safe ordered prefix aggregates — the one primitive behind every
+"running total / running max over a globally-ordered relation" in this
+engine: vocabulary ids (``swivel.assign_ids``), packing offsets, ranks,
+CDFs, quantiles and step-down envelopes.
 
 A naive ``SUM() OVER (ORDER BY ...)`` with no PARTITION BY forces Spark
 to collapse the whole relation into ONE task (Exchange SinglePartition +
 Sort) — correct at test scale, a single-executor sort at 100 TB. The
-two-pass scheme here (the X46/X90 pattern born in packing/dedup, promoted
-to a public operator per the round-9 verdict) computes the identical
-values with no single-task data stage:
+two-pass body here (:func:`_two_pass`) computes the identical values with
+no single-task data stage and no driver collect:
 
-1. range-partition by the order columns (equal keys land together, so
-   partition-local order is a contiguous slice of the global order) and
-   sort within partitions;
-2. partition-local prefix sums in parallel (a window PARTITIONED by the
-   physical partition id — never a global window);
-3. add per-partition offsets computed from the partition TOTALS — a
-   control relation of at most ``#partitions`` rows (ungrouped: a
-   driver-side cumsum over #partitions numbers; grouped: a per-group
-   window over the totals relation, whose partition spec is non-empty so
-   no single-partition exchange appears anywhere in the plan).
+1. range-partition by (group, order) and tag every row with its
+   partition id ``_pid`` — equal keys land together, so each partition
+   is a contiguous slice of the global order;
+2. a partition-local running window (PARTITIONED by ``_pid``);
+3. per-partition totals — a control relation of at most
+   ``#partitions + #groups`` rows;
+4. an offsets window over those totals in ``_pid`` order (per group);
+5. broadcast-join the offsets back and combine them with the local
+   values.
 
-Grouped form: with ``group_cols`` the running sum RESETS per group and
-rows are range-partitioned by (group, order) — each group occupies a
-contiguous run of partitions, so the totals relation has at most
-``#partitions + #groups`` rows and is broadcast back. Use the grouped
-form when group cardinality is control-plane-sized (sources, languages,
-shards); a per-group window is the right tool only when groups are
-numerous AND individually small.
+Partition ids are fixed by ONE persist. RangePartitioner samples its
+boundaries per execution, so if branches 2 and 3 each executed the range
+exchange, a row near a boundary could get one ``_pid`` in the local
+branch and another in the totals branch, and the offsets would be
+silently wrong (duplicated or skipped vocabulary ids). The
+``_pid``-tagged relation is therefore persisted through
+``cache.track_persist`` and both branches read the same
+materialisation — exact whether or not Spark reuses the exchange, and
+whether or not a cached block is evicted (a recomputed block re-reads
+the same shuffle output).
+
+Release contract: the returned DataFrame is lazy and reads the persisted
+relation, so fetch or write it before the session owner calls
+``cache.release_persisted()`` — or inside a ``cache.persisted_scope()``
+whose exit releases it. Released too early, the plan re-runs the range
+exchange per branch and loses the guarantee above.
+
+Grouped form: with ``group_cols`` the running aggregate RESETS per group
+and each group occupies a contiguous run of partitions. Use it when
+group cardinality is control-plane-sized (sources, languages, shards); a
+per-group window is the right tool only when groups are numerous AND
+individually small.
 
 Determinism contract: ``order_cols`` must totally order the rows within
 each group (build the relation with a groupBy on the order key first, as
@@ -39,11 +54,75 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from swivel_spark_prep_spark.cache import track_persist
+
 __all__ = [
     "partitioned_prefix_sum",
     "partitioned_prefix_extremum",
     "weighted_quantile",
 ]
+
+
+def _two_pass(
+    df, order_cols, group_cols, inclusive, value_cols, out_cols, agg_fn, combine
+):
+    """The shared body: ``out = combine(local, offset)`` per value column,
+    where ``local`` is ``agg_fn`` over the row's partition-local prefix
+    and ``offset`` is ``agg_fn`` over all earlier partitions of its
+    group (NULL for the first). Input columns are preserved."""
+    group_cols = list(group_cols or [])
+    order_cols = list(order_cols)
+    # NOT df.rdd.getNumPartitions() (plan-to-RDD conversion; single-file
+    # inputs would collapse the range exchange to one partition) —
+    # shuffle.partitions is the knob deployments size to their data.
+    spark = df.sparkSession
+    n_part = max(
+        int(spark.conf.get("spark.sql.shuffle.partitions", "200")),
+        spark.sparkContext.defaultParallelism,
+        2,
+    )
+    # _gconst keeps the offsets window's partition spec non-empty when
+    # there are no groups (an unpartitioned Window is the shape the plan
+    # guardrail bans). Stored in the persisted relation, the constant is
+    # an opaque attribute to Catalyst, so it is not folded out.
+    keys = [*group_cols, "_gconst"]
+    tagged = track_persist(
+        df.repartitionByRange(n_part, *group_cols, *order_cols)
+        .sortWithinPartitions(*group_cols, *order_cols)
+        .withColumn("_pid", F.spark_partition_id())
+        .withColumn("_gconst", F.lit(0))
+    )
+    w_local = (
+        Window.partitionBy("_pid", *group_cols)
+        .orderBy(*order_cols)
+        .rowsBetween(Window.unboundedPreceding, 0 if inclusive else -1)
+    )
+    w_off = (
+        Window.partitionBy(*keys)
+        .orderBy("_pid")
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    local = tagged.select(
+        "*", *[agg_fn(v).over(w_local).alias(f"_loc_{v}") for v in value_cols]
+    )
+    offsets = (
+        tagged.groupBy("_pid", *keys)
+        .agg(*[agg_fn(v).alias(f"_t_{v}") for v in value_cols])
+        .select(
+            "_pid",
+            *keys,
+            *[agg_fn(f"_t_{v}").over(w_off).alias(f"_off_{v}") for v in value_cols],
+        )
+    )
+    out = local.join(F.broadcast(offsets), ["_pid", *keys])
+    for v, o in zip(value_cols, out_cols):
+        out = out.withColumn(o, combine(F.col(f"_loc_{v}"), F.col(f"_off_{v}")))
+    return out.drop(
+        "_pid",
+        "_gconst",
+        *[f"_loc_{v}" for v in value_cols],
+        *[f"_off_{v}" for v in value_cols],
+    )
 
 
 def partitioned_prefix_sum(
@@ -66,88 +145,11 @@ def partitioned_prefix_sum(
     out_cols = list(out_cols) if out_cols else [f"{v}_cum" for v in value_cols]
     if len(out_cols) != len(value_cols):
         raise ValueError("out_cols must match value_cols in length")
-    group_cols = list(group_cols or [])
-    order_cols = list(order_cols)
-
-    # NOT df.rdd.getNumPartitions() (plan-to-RDD conversion; single-file
-    # inputs would collapse the range exchange to one partition) —
-    # shuffle.partitions is the knob deployments size to their data.
-    spark = df.sparkSession
-    n_part = max(
-        int(spark.conf.get("spark.sql.shuffle.partitions", "200")),
-        spark.sparkContext.defaultParallelism,
-        2,
+    zero = F.lit(0)
+    return _two_pass(
+        df, order_cols, group_cols, inclusive, value_cols, out_cols, F.sum,
+        lambda loc, off: F.coalesce(loc, zero) + F.coalesce(off, zero),
     )
-    ranged = df.repartitionByRange(
-        n_part, *group_cols, *order_cols
-    ).sortWithinPartitions(*group_cols, *order_cols)
-    with_pid = ranged.withColumn("_pid", F.spark_partition_id())
-
-    bound = 0 if inclusive else -1
-    w_local = (
-        Window.partitionBy("_pid", *group_cols)
-        .orderBy(*order_cols)
-        .rowsBetween(Window.unboundedPreceding, bound)
-    )
-    # Offsets come from a window over the TOTALS relation (≤ n_part +
-    # #groups rows, broadcast back). Round 17 (guide §1.2/§5): the
-    # ungrouped path used to persist the ranged relation and COLLECT the
-    # per-partition totals to the driver — 2 extra Spark jobs, a cache
-    # materialization and a driver sync for every call of the engine's
-    # most shared kernel (every rank/quantile/CDF operator sits on it;
-    # the per-op job-scheduling floor multiplies with job count). Both
-    # paths now share the grouped formula, the ungrouped one keyed by a
-    # constant pseudo-group: the offsets window runs over the bounded
-    # totals relation (never data rows), the plan stays fully lazy, and
-    # the ranged shuffle is shared by the local and totals branches via
-    # ReuseExchange inside the single action. The running-sum offset
-    # accumulates partition totals in ascending _pid order — the same
-    # left-to-right addition order as the old driver-side loop, so
-    # floating-point results are bit-identical.
-    gkey = group_cols or ["_gconst"]
-    if not group_cols:
-        # NOT F.lit(0): FoldablePropagation would inline the literal and
-        # strip it from the offsets window's partition spec, leaving an
-        # unpartitioned Window in the plan (the exact shape the plan
-        # guardrail bans). spark_partition_id() % 1 is always 0 — one
-        # runtime partition, same ascending-_pid addition order — but
-        # is flagged non-deterministic, so Catalyst keeps the attribute
-        # opaque and the partition spec non-empty.
-        with_pid = with_pid.withColumn(
-            "_gconst", F.spark_partition_id() % F.lit(1)
-        )
-    local = with_pid.select(
-        "*",
-        *[
-            F.coalesce(F.sum(v).over(w_local), F.lit(0)).alias(f"_loc_{v}")
-            for v in value_cols
-        ],
-    )
-    totals = with_pid.groupBy("_pid", *gkey).agg(
-        *[F.sum(v).alias(f"_t_{v}") for v in value_cols]
-    )
-    w_off = (
-        Window.partitionBy(*gkey)
-        .orderBy("_pid")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    off_df = totals.select(
-        "_pid",
-        *gkey,
-        *[
-            F.coalesce(F.sum(f"_t_{v}").over(w_off), F.lit(0)).alias(
-                f"_off_{v}"
-            )
-            for v in value_cols
-        ],
-    )
-    out = local.join(F.broadcast(off_df), ["_pid", *gkey])
-    for v, o in zip(value_cols, out_cols):
-        out = out.withColumn(o, F.col(f"_loc_{v}") + F.col(f"_off_{v}"))
-    out = out.drop(*[f"_off_{v}" for v in value_cols])
-
-    drop_extra = [] if group_cols else ["_gconst"]
-    return out.drop("_pid", *drop_extra, *[f"_loc_{v}" for v in value_cols])
 
 
 def partitioned_prefix_extremum(
@@ -161,81 +163,29 @@ def partitioned_prefix_extremum(
     agg: str = "max",
 ) -> DataFrame:
     """Running MAX/MIN over the total order ``order_cols`` (within
-    ``group_cols``), same two-pass scheme as
-    :func:`partitioned_prefix_sum` — range-partition + partition-local
-    window + per-partition extremum offsets — so no single-partition
-    data stage appears anywhere. ``order_cols`` may contain descending
-    Column expressions (``F.col("x").desc()``); the range partitioner,
-    the local sort and the local window all honor them.
+    ``group_cols``), the same two-pass body as
+    :func:`partitioned_prefix_sum`. ``order_cols`` may contain
+    descending Column expressions (``F.col("x").desc()``); the range
+    partitioner, the local sort and the local window all honor them.
 
     Rows whose prefix is empty (the global/group first row under
     ``inclusive=False``) get NULL — the honest "no preceding value"
     answer (there is no additive identity for max the way 0 is for
-    sum). Downstream, ``F.greatest``/``F.least`` skip NULLs, which is
-    exactly how the offsets are merged here.
+    sum). ``F.greatest``/``F.least`` skip NULLs, which is exactly how
+    the offsets are merged here.
 
-    The skyline/Pareto operator is the motivating consumer: the
-    2-D front is "keep x-groups whose best y beats the running max of
-    all better-x groups" — a prefix max over the distinct-x relation.
+    Consumers: the skyline/Pareto front ("keep x-groups whose best y
+    beats the running max of all better-x groups") and Holm's
+    step-down envelope (an inclusive running max in p order).
     """
     if agg not in ("max", "min"):
         raise ValueError(f"agg must be 'max' or 'min', got {agg!r}")
-    agg_fn = F.max if agg == "max" else F.min
-    comb = F.greatest if agg == "max" else F.least
-    out_col = out_col or f"{value_col}_{agg}"
-    group_cols = list(group_cols or [])
-    order_cols = list(order_cols)
-
-    spark = df.sparkSession
-    n_part = max(
-        int(spark.conf.get("spark.sql.shuffle.partitions", "200")),
-        spark.sparkContext.defaultParallelism,
-        2,
+    return _two_pass(
+        df, order_cols, group_cols, inclusive, [value_col],
+        [out_col or f"{value_col}_{agg}"],
+        F.max if agg == "max" else F.min,
+        F.greatest if agg == "max" else F.least,
     )
-    ranged = df.repartitionByRange(
-        n_part, *group_cols, *order_cols
-    ).sortWithinPartitions(*group_cols, *order_cols)
-    with_pid = ranged.withColumn("_pid", F.spark_partition_id())
-
-    bound = 0 if inclusive else -1
-    w_local = (
-        Window.partitionBy("_pid", *group_cols)
-        .orderBy(*order_cols)
-        .rowsBetween(Window.unboundedPreceding, bound)
-    )
-    # Round 17: same lazy unification as partitioned_prefix_sum — the
-    # ungrouped path's persist + driver-side collect of partition
-    # extrema (2 extra jobs + a cache per call) is replaced by the
-    # grouped formula over a constant pseudo-group; the offsets window
-    # runs over the ≤ n_part-row totals relation only. greatest/least
-    # skip the NULL offset of the first partition, preserving the
-    # "empty prefix → local extremum only" semantics exactly.
-    gkey = group_cols or ["_gconst"]
-    if not group_cols:
-        # non-foldable constant — see partitioned_prefix_sum above
-        with_pid = with_pid.withColumn(
-            "_gconst", F.spark_partition_id() % F.lit(1)
-        )
-    local = with_pid.select(
-        "*", agg_fn(value_col).over(w_local).alias("_loc")
-    )
-    totals = with_pid.groupBy("_pid", *gkey).agg(
-        agg_fn(value_col).alias("_t")
-    )
-    w_off = (
-        Window.partitionBy(*gkey)
-        .orderBy("_pid")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    off_df = totals.select(
-        "_pid", *gkey, agg_fn("_t").over(w_off).alias("_off")
-    )
-    out = local.join(F.broadcast(off_df), ["_pid", *gkey]).withColumn(
-        out_col, comb(F.col("_loc"), F.col("_off"))
-    )
-    out = out.drop("_off")
-    drop_extra = [] if group_cols else ["_gconst"]
-    return out.drop("_pid", "_loc", *drop_extra)
 
 
 def weighted_quantile(

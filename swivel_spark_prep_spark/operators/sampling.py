@@ -135,12 +135,15 @@ def deterministic_shuffle(
     identically on every rerun" step of a data pipeline. md5 (not
     xxhash64) so external systems can replay the exact order.
 
-    The rank comes from swivel.assign_ids' two-pass scheme:
-    range-partition on the hash (parallel sorted runs), rank within each
-    partition, add per-partition offsets (a driver-side cumsum over
-    partition COUNTS, never data) — a global total order with no
-    single-reducer window. At 100 TB, skip the rank column when only the
-    order matters and write the range-sorted output directly.
+    The rank is swivel.assign_ids, i.e. an inclusive prefix count over
+    operators/ranks.py's two-pass kernel: range-partition on the hash
+    (parallel sorted runs), rank within each partition, add
+    per-partition offsets from a window over the partition COUNTS — a
+    global total order with no single-reducer window and no driver
+    collect. The kernel's one persist fixes each row's partition id, so
+    fetch or write the result before ``cache.release_persisted()``. At
+    100 TB, skip the rank column when only the order matters and write
+    the range-sorted output directly.
     """
     h = F.md5(F.concat(F.lit(salt), F.col(key_col).cast("string")))
     from swivel_spark_prep_spark.operators.swivel import assign_ids

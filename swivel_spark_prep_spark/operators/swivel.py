@@ -12,9 +12,12 @@ for Spark):
 
 Scale design (SURVEY.md §7.5 — deliberately NOT the reference's driver
 -collect-and-broadcast architecture):
-- id assignment uses a two-pass range-partitioned rank, never a global
-  row_number window (single-task bottleneck) and never a driver collect of
-  the vocabulary;
+- id assignment is an inclusive prefix count over operators/ranks.py's
+  two-pass kernel — never a global row_number window (single-task
+  bottleneck), never a driver collect. The kernel's one persist fixes
+  each row's partition id; the ids are valid until
+  ``cache.release_persisted()``, the contract ``prep``'s own persists
+  already follow;
 - the token→id mapping is applied with a join (Catalyst broadcasts it
   automatically when small; at 100 TB vocab scale it degrades gracefully
   to a shuffle join instead of OOMing the driver);
@@ -28,7 +31,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -41,51 +44,19 @@ def tokenize(docs: DataFrame, text_col: str = "text", doc_col: str = "doc_id") -
 
 
 def assign_ids(df: DataFrame, order_cols: list, id_col: str = "id") -> DataFrame:
-    """Deterministic dense 0-based ids by a total order, without a global
-    window. Two-pass rank: range-partition on the order, rank within each
-    partition in parallel, then add per-partition offsets (a tiny
-    driver-side cumsum over partition *counts*, never data)."""
-    # session parallelism, NOT df.rdd.getNumPartitions() — touching .rdd
-    # forces a full plan-to-RDD conversion just to read a partition count
-    n_part = max(df.sparkSession.sparkContext.defaultParallelism, 1)
-    ranged = df.repartitionByRange(n_part, *order_cols).sortWithinPartitions(*order_cols)
-    with_pid = ranged.withColumn("_pid", F.spark_partition_id())
-    # Pass 1: per-partition counts (n_part rows — metadata, not data).
-    counts = dict(
-        with_pid.groupBy("_pid").count().collect()
+    """Dense 0-based ids by a total order (the vocabulary id is the
+    token's rank) — an inclusive prefix count minus one over
+    ``ranks.partitioned_prefix_sum``: no global window, no driver
+    collect, and exact because the kernel's one persist fixes every
+    row's range partition (see operators/ranks.py, including its
+    release contract)."""
+    from swivel_spark_prep_spark.operators.ranks import partitioned_prefix_sum
+
+    ranked = partitioned_prefix_sum(
+        df.withColumn("_one", F.lit(1)), order_cols, "_one", [id_col],
+        inclusive=True,
     )
-    offsets = {}
-    acc = 0
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-    # Pass 2: rank within each partition (parallel windows) + offset.
-    w = Window.partitionBy("_pid").orderBy(*order_cols)
-    local = with_pid.withColumn("_rn", F.row_number().over(w) - 1)
-    if len(offsets) <= 64:
-        # small cluster: constant-fold the offsets into one expression
-        offset_col = F.coalesce(
-            *[
-                F.when(F.col("_pid") == pid, F.lit(off))
-                for pid, off in offsets.items()
-            ]
-            or [F.lit(0)],
-            F.lit(0),
-        )
-        ranked = local.withColumn(
-            id_col, (F.col("_rn") + offset_col).cast("long")
-        )
-    else:
-        # thousands of partitions: a 10⁴-branch CASE chain blows up
-        # codegen — broadcast-join the (pid, offset) table instead
-        spark = df.sparkSession
-        off_df = spark.createDataFrame(
-            [(int(p), int(o)) for p, o in offsets.items()], "_pid int, _off long"
-        )
-        ranked = local.join(F.broadcast(off_df), "_pid").withColumn(
-            id_col, (F.col("_rn") + F.col("_off")).cast("long")
-        ).drop("_off")
-    return ranked.drop("_pid", "_rn")
+    return ranked.withColumn(id_col, (F.col(id_col) - 1).cast("long")).drop("_one")
 
 
 def build_vocab(

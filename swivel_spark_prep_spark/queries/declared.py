@@ -803,7 +803,9 @@ ORDER BY id;""",
 def q33(spark, sf_dir):
     # 0-based dense id by (count desc, token asc) — the declared contract.
     # Note: a global row_number window is a single-task bottleneck; the
-    # scale path (operators/swivel.py) uses a two-pass rank instead.
+    # scale path (swivel.assign_ids) is an inclusive prefix count over
+    # operators/ranks.py's two-pass kernel, whose one persist fixes the
+    # partition ids (fetch before cache.release_persisted()).
     w = Window.orderBy(F.col("cnt").desc(), F.col("tok"))
     return (
         q32(spark, sf_dir)

@@ -1260,10 +1260,11 @@ FROM documents ORDER BY shuffle_rank;""",
 )
 def x46(spark, sf_dir):
     # Reproducible global training-order shuffle: rank by
-    # md5(salt || key) via assign_ids' two-pass range-partitioned rank
-    # (per-partition counts are the only driver traffic — no global
-    # window). Changing the salt ("ep1", …) reshuffles per epoch,
-    # identically on every engine and rerun.
+    # md5(salt || key) via assign_ids — a prefix count over the ranks
+    # kernel, whose one persist fixes the partition ids (no global
+    # window, no driver collect; fetch before release_persisted()).
+    # Changing the salt ("ep1", …) reshuffles per epoch, identically on
+    # every engine and rerun.
     from swivel_spark_prep_spark.operators import sampling
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
@@ -1715,8 +1716,9 @@ def x55(spark, sf_dir):
     "X56_bpe_vocab",
     # BPE-token vocabulary with dense ids — the subword twin of the
     # reference pipeline's word vocab (Q32/Q33). Oracle assigns ids with
-    # one global window; the engine reuses swivel.assign_ids (two-pass
-    # range-partitioned rank, no single-task stage).
+    # one global window; the engine reuses swivel.assign_ids (a prefix
+    # count over the ranks kernel: no single-task stage, partition ids
+    # fixed by its one persist, valid until release_persisted()).
     f"""WITH tok AS (
   SELECT unnest(regexp_extract_all({_BPE_S}, '<([a-z0-9]+)>', 1)) AS tok
   FROM documents),

@@ -1096,6 +1096,7 @@ def stream_sprt(
         return bool(fs.exists(jp))
 
     def _apply(batch: DataFrame, batch_id: int):
+        from swivel_spark_prep_spark.cache import persisted_scope
         from swivel_spark_prep_spark.operators.ranks import partitioned_prefix_sum
 
         spark = batch.sparkSession
@@ -1113,19 +1114,21 @@ def stream_sprt(
             (x * F.lit(lp) + (F.lit(1.0) - x) * F.lit(ln_)).alias("_llr"),
             F.lit(1.0).alias("_one"),
         ).filter(F.col("_llr").isNotNull())
-        cum = partitioned_prefix_sum(
-            base, list(order_cols), ["_llr", "_one"], ["_c", "_n"], inclusive=True
-        ).select(
-            (F.col("_c") + F.lit(cum0)).alias("_cum"),
-            (F.col("_n") + F.lit(float(n0))).alias("_gn"),
-            "_llr",
-        )
-        agg = cum.agg(
-            F.count("*").alias("_bn"),
-            F.coalesce(F.sum("_llr"), F.lit(0.0)).alias("_bs"),
-            F.min(F.when(F.col("_cum") >= a_bound, F.col("_gn"))).alias("_n1"),
-            F.min(F.when(F.col("_cum") <= b_bound, F.col("_gn"))).alias("_n0"),
-        ).collect()[0]
+        # the kernel persists once per call: release it with the batch
+        with persisted_scope():
+            cum = partitioned_prefix_sum(
+                base, list(order_cols), ["_llr", "_one"], ["_c", "_n"], inclusive=True
+            ).select(
+                (F.col("_c") + F.lit(cum0)).alias("_cum"),
+                (F.col("_n") + F.lit(float(n0))).alias("_gn"),
+                "_llr",
+            )
+            agg = cum.agg(
+                F.count("*").alias("_bn"),
+                F.coalesce(F.sum("_llr"), F.lit(0.0)).alias("_bs"),
+                F.min(F.when(F.col("_cum") >= a_bound, F.col("_gn"))).alias("_n1"),
+                F.min(F.when(F.col("_cum") <= b_bound, F.col("_gn"))).alias("_n0"),
+            ).collect()[0]
         n_total = n0 + int(agg["_bn"])
         cum_total = cum0 + float(agg["_bs"])
         if decision == "continue":
@@ -1456,6 +1459,7 @@ def stream_msprt(
         return bool(fs.exists(jp))
 
     def _apply(batch: DataFrame, batch_id: int):
+        from swivel_spark_prep_spark.cache import persisted_scope
         from swivel_spark_prep_spark.operators.ranks import (
             partitioned_prefix_sum,
         )
@@ -1479,28 +1483,30 @@ def stream_msprt(
         base = batch.select(
             *order_cols, x.alias("_x"), F.lit(1.0).alias("_one")
         ).filter(F.col("_x").isNotNull())
-        cum = partitioned_prefix_sum(
-            base, list(order_cols), ["_x", "_one"], ["_cs", "_cn"],
-            inclusive=True,
-        ).select(
-            (F.col("_cs") + F.lit(s0)).alias("_s"),
-            (F.col("_cn") + F.lit(float(n0))).alias("_n"),
-            "_x",
-        )
-        n, s = F.col("_n"), F.col("_s")
-        dev = s / n - F.lit(float(mu0))
-        ll = (
-            -0.5 * F.log(1.0 + n)
-            + n * n * dev * dev / (2.0 * F.lit(float(sigma2)) * (1.0 + n))
-        )
-        agg = cum.select(ll.alias("_ll"), "_n", "_x").agg(
-            F.count("*").alias("_bn"),
-            F.coalesce(F.sum("_x"), F.lit(0.0)).alias("_bs"),
-            F.max("_ll").alias("_bmax"),
-            F.min(
-                F.when(F.col("_ll") >= F.lit(thresh), F.col("_n"))
-            ).alias("_cross"),
-        ).collect()[0]
+        # the kernel persists once per call: release it with the batch
+        with persisted_scope():
+            cum = partitioned_prefix_sum(
+                base, list(order_cols), ["_x", "_one"], ["_cs", "_cn"],
+                inclusive=True,
+            ).select(
+                (F.col("_cs") + F.lit(s0)).alias("_s"),
+                (F.col("_cn") + F.lit(float(n0))).alias("_n"),
+                "_x",
+            )
+            n, s = F.col("_n"), F.col("_s")
+            dev = s / n - F.lit(float(mu0))
+            ll = (
+                -0.5 * F.log(1.0 + n)
+                + n * n * dev * dev / (2.0 * F.lit(float(sigma2)) * (1.0 + n))
+            )
+            agg = cum.select(ll.alias("_ll"), "_n", "_x").agg(
+                F.count("*").alias("_bn"),
+                F.coalesce(F.sum("_x"), F.lit(0.0)).alias("_bs"),
+                F.max("_ll").alias("_bmax"),
+                F.min(
+                    F.when(F.col("_ll") >= F.lit(thresh), F.col("_n"))
+                ).alias("_cross"),
+            ).collect()[0]
         n_total = n0 + int(agg["_bn"])
         s_total = s0 + float(agg["_bs"])
         mx = mx0

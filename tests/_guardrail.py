@@ -8,7 +8,12 @@ round 10). This test freezes the inventory of queries that carry one
 ON PURPOSE, each over a provably bounded relation:
 
 - Q33 / Q35 / X39: the vocab-id rank — vocab-cardinality; the 100 TB
-  path is the two-pass rank in operators/swivel.py (same results).
+  path is swivel.assign_ids, a prefix count over operators/ranks.py's
+  two-pass kernel (same results). That kernel persists its
+  partition-tagged relation once — fixing the partition ids — and
+  stores a constant group column in it, so its offsets window keeps a
+  non-empty partition spec and never counts here; its lazy output is
+  valid until cache.release_persisted().
 - X17: the distribution-window class demo (ntile/percent_rank/
   cume_dist) — global by contract; the scale path for quantile
   bucketing is X14's approx_percentile.

@@ -23,6 +23,7 @@ end); plan-guardrail walks are per-thread py4j traffic.
 
 from __future__ import annotations
 
+import os
 import threading
 from concurrent.futures import ThreadPoolExecutor
 
@@ -45,12 +46,16 @@ def prefetch_replays(spark, sf_dir, queries, oracles, extra_check=None):
     tls = threading.local()
     cons: list = []
     cons_lock = threading.Lock()
+    # realpath: a trailing slash or a symlinked fixture dir must not
+    # silently switch the guardrail off (conftest asserts SF_SMOKE is
+    # among the replayed SFs under the same normalisation)
+    guarded = os.path.realpath(sf_dir) == os.path.realpath(SF_SMOKE)
 
     def one(name):
         try:
             df = queries[name](spark, sf_dir)
             problems: list[str] = []
-            if sf_dir == SF_SMOKE:
+            if guarded:
                 # guardrail on the SAME DataFrame the replay executes —
                 # one Catalyst planning pass per query per suite run
                 try:

@@ -32,6 +32,18 @@ def sf_dir():
     return SF_SMOKE
 
 
+@pytest.fixture(scope="session", autouse=True)
+def _smoke_sf_is_replayed():
+    """The plan guardrail runs inside the oracle replay of the smoke SF
+    only (tests/_replay.py), so SF_SMOKE must be one of the replayed SFs
+    — otherwise every replay would skip the guardrail without a failure."""
+    replayed = {os.path.realpath(p) for p in ORACLE_SFS}
+    assert os.path.realpath(SF_SMOKE) in replayed, (
+        f"SF_SMOKE {SF_SMOKE!r} is not among the oracle-replay SFs "
+        f"{ORACLE_SFS}: the plan guardrail would never run"
+    )
+
+
 @pytest.fixture(autouse=True)
 def _release_persisted_blocks():
     """Unpersist operator intermediates after every test — no persisted
@@ -40,6 +52,18 @@ def _release_persisted_blocks():
     from swivel_spark_prep_spark.cache import release_persisted
 
     release_persisted()
+
+
+@pytest.fixture(params=["true", "false"], ids=["reuse", "no_reuse"])
+def exchange_reuse(spark, request):
+    """Runs a test with Spark's exchange reuse on and off, restoring the
+    session conf afterwards — results must not depend on whether the
+    planner dedupes a repeated (re-sampled) range exchange."""
+    key = "spark.sql.exchange.reuse"
+    old = spark.conf.get(key)
+    spark.conf.set(key, request.param)
+    yield request.param
+    spark.conf.set(key, old)
 
 
 @pytest.fixture(scope="session")

@@ -708,6 +708,9 @@ def test_stream_msprt_always_valid_and_sticky(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(replay))
     )
+    from swivel_spark_prep_spark import cache
+
+    persisted_before = len(cache._PERSISTED)
     q = stream_msprt(
         stream,
         ["t"],
@@ -723,6 +726,8 @@ def test_stream_msprt_always_valid_and_sticky(spark, tmp_path):
         q.processAllAvailable()
     finally:
         q.stop()
+    # each batch releases what its prefix-kernel call persisted
+    assert len(cache._PERSISTED) == persisted_before
     snaps = [
         spark.read.parquet(str(tmp_path / "out" / f"batch_id={b}"))
         .collect()[0]

@@ -896,6 +896,9 @@ def test_stream_sprt_matches_batch_and_is_sticky(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(replay))
     )
+    from swivel_spark_prep_spark import cache
+
+    persisted_before = len(cache._PERSISTED)
     q = stream_sprt(
         stream,
         ["t"],
@@ -910,6 +913,8 @@ def test_stream_sprt_matches_batch_and_is_sticky(spark, tmp_path):
         q.processAllAvailable()
     finally:
         q.stop()
+    # each batch releases what its prefix-kernel call persisted
+    assert len(cache._PERSISTED) == persisted_before
     out_dirs = sorted(glob.glob(str(tmp_path / "out" / "batch_id=*")))
     assert len(out_dirs) == 3
     snaps = [spark.read.parquet(d).collect()[0] for d in out_dirs]

@@ -51,6 +51,32 @@ def test_assign_ids_matches_global_row_number(spark, sf_dir):
     assert [r.id for r in rows] == list(range(len(rows)))
 
 
+@pytest.mark.parametrize("v", [2_000, 200_000])
+def test_assign_ids_matches_global_row_number_synthetic(spark, v, exchange_reuse):
+    # Vocabularies past the range partitioner's sample, where its
+    # boundaries differ between executions. A local[8] session samples
+    # 3 x 100 x 8 = 2,400 keys, which would cover V=2,000 exactly, so
+    # the per-partition hint drops to Spark's RDD-level default of 20.
+    # Zipf-like counts with long runs of ties; zero-padded tokens make
+    # the generating index the expected rank under (count desc, tok asc).
+    key = "spark.sql.execution.rangeExchange.sampleSizePerPartition"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "20")
+    try:
+        vocab = spark.range(v).select(
+            F.format_string("t%07d", "id").alias("tok"),
+            F.floor(F.lit(10**6) / (F.col("id") + 1)).alias("cnt"),
+            F.col("id").alias("want"),
+        )
+        ids = assign_ids(vocab, [F.col("cnt").desc(), F.col("tok").asc()])
+        n, wrong = ids.agg(
+            F.count("*"), F.count(F.when(F.col("id") != F.col("want"), 1))
+        ).first()
+    finally:
+        spark.conf.set(key, old)
+    assert (n, wrong) == (v, 0)
+
+
 def test_cooc_symmetric(result):
     # M = Mᵀ: joining the matrix to its transpose finds every entry with
     # equal weight.
