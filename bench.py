@@ -54,6 +54,16 @@ def _raise_term(signum, frame):  # pragma: no cover - signal path
     raise _Term()
 
 
+#: set by the flag-only SIGTERM handler that replaces ``_raise_term``
+#: once the last protected block is done
+_TERM_LATE = False
+
+
+def _note_term(signum, frame):
+    global _TERM_LATE
+    _TERM_LATE = True
+
+
 # One anchor per workload class: hash agg (Q13), window frame (Q20),
 # scalar-compute + global sort + wide fetch (Q28), shingle self-join (Q41).
 # Four classes so that environment noise self-identifies — a contended
@@ -467,6 +477,10 @@ def main() -> None:
         calib = _duckdb_calibration() if aborted != "sigterm" else {}
     except _Term:
         aborted, calib = "sigterm", {}
+    # Past the last protected block: a _Term raised from here on would
+    # escape payload assembly or the snapshot write and lose the line,
+    # so a late TERM only sets a flag.
+    signal.signal(signal.SIGTERM, _note_term)
     # Calibrated ratio per anchor: Spark wall / in-run DuckDB wall, both
     # measured in THIS environment minutes apart — the number the judge
     # reads instead of the drift-prone cross-file BASELINE.md ratio.
@@ -566,38 +580,45 @@ def main() -> None:
     # complete sweeps, or round+1's re-measure trips against a hole.
     partial = bool(ONLY) or bool(extras_skipped) or aborted is not None
     snap = "BENCH_PARTIAL.json" if partial else "BENCH_LOCAL.json"
+    _emit(
+        payload,
+        os.path.join(os.path.dirname(os.path.abspath(__file__)), snap),
+        {
+            **payload,
+            "queries": short_ids,
+            "queries_full": times,
+            "queries_run1": run1,
+            "split": split,
+            "remeasured_full": remeasured if not ONLY else {},
+            "extras_skipped": extras_skipped,
+            "load1_after_query": loads,
+            "env": {
+                "start": env_start,
+                "mid_extras": env_mid,
+                "end": _env_snapshot() if aborted != "sigterm" else None,
+            },
+        },
+        spark,
+    )
+
+
+def _emit(payload: dict, snap_path: str, snapshot: dict, spark) -> None:
+    """Write the snapshot file, stop Spark and print the payload line.
+    Runs under the flag-only SIGTERM handler; after a late TERM the
+    Spark stop is skipped (the KILL that follows a TERM would otherwise
+    find the line unprinted behind a slow JVM shutdown)."""
     try:
-        with open(
-            os.path.join(os.path.dirname(os.path.abspath(__file__)), snap),
-            "w",
-        ) as fh:
-            json.dump(
-                {
-                    **payload,
-                    "queries": short_ids,
-                    "queries_full": times,
-                    "queries_run1": run1,
-                    "split": split,
-                    "remeasured_full": remeasured if not ONLY else {},
-                    "extras_skipped": extras_skipped,
-                    "load1_after_query": loads,
-                    "env": {
-                        "start": env_start,
-                        "mid_extras": env_mid,
-                        "end": _env_snapshot() if aborted != "sigterm" else None,
-                    },
-                },
-                fh,
-                indent=1,
-            )
+        with open(snap_path, "w") as fh:
+            json.dump(snapshot, fh, indent=1)
             fh.write("\n")
     except OSError:
         pass
-    try:  # stop BEFORE printing so no JVM output can follow the line;
-        # never let a hung/interrupted stop swallow the payload
-        spark.stop()
-    except Exception:
-        pass
+    if not _TERM_LATE:
+        try:  # stop BEFORE printing so no JVM output can follow the line;
+            # never let a hung/interrupted stop swallow the payload
+            spark.stop()
+        except Exception:
+            pass
     sys.stdout.flush()
     print(json.dumps(payload, separators=(",", ":")))
     sys.stdout.flush()

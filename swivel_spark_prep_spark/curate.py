@@ -16,11 +16,16 @@ contamination.decontaminate, sampling.temperature_resample,
 bpe.train_bpe / bpe_encode, packing.pack_sequences, sinks.*) — this
 module adds only composition, accounting, and the manifest artifact.
 
-Scale notes: per-stage counts are single hash aggregates; each stage's
-survivor relation is persisted (MEMORY_AND_DISK via cache.track_persist)
-so the count action and the next stage share one computation instead of
-replaying the whole lineage per stage. Drop-reason accounting for the
-quality stage is one conditional aggregate over the failed rows.
+Scale notes: the manifest's counts cost no Spark job of their own. Each
+stage's survivor relation carries a ``pyspark.sql.Observation`` (row
+count; Gopher rule-failure sums; packed token and chunk totals) that
+rides on actions the pipeline runs anyway — the connected-components
+checkpoints, ``train_bpe``'s collect, the sink write — and is read after
+the sink write. Only relations two consumers read are persisted: the
+stage survivors from exact dedup on (MinHash + anti-join,
+``decontaminate``, ``temperature_resample``, ``train_bpe`` +
+``bpe_encode``) and the BPE-encoded relation (packing kernel + join, so
+the merge chain runs once); all are released before ``curate`` returns.
 Nothing row-scale ever reaches the driver; the manifest holds counts
 and config only.
 """
@@ -31,10 +36,10 @@ import json
 import os
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from swivel_spark_prep_spark.cache import track_persist
+from swivel_spark_prep_spark.cache import persisted_scope, track_persist
 
 GOPHER_RULES = (
     "ok_word_count",
@@ -69,6 +74,21 @@ def _write_rejects(enabled: bool, out_dir: str, stage: str,
         )
 
 
+def _observe(df: DataFrame, *extra, rows=None) -> tuple[DataFrame, Observation]:
+    """Attach an Observation holding ``rows`` (default: the row count)
+    and ``extra`` to ``df``. The metrics are those of the FIRST action
+    that runs the observed node, so that action must read the whole
+    relation: a ``limit``/``isEmpty``/``take`` reaching it first would
+    leave a partial count in the manifest."""
+    obs = Observation()
+    rows = F.count(F.lit(1)) if rows is None else rows
+    return df.observe(obs, rows.alias("rows"), *extra), obs
+
+
+# every handle persisted inside a call (stage caches, the BPE relation,
+# the prefix kernel's tagged relation, the MinHash shingles) is released
+# when it returns, after the sink write has read them
+@persisted_scope()
 def curate(
     spark: SparkSession,
     docs: DataFrame,
@@ -101,8 +121,10 @@ def curate(
     booleans; the surviving duplicate's id for both dedup stages; the
     contamination/resample drop is the id alone) — the triage trail a
     curation run needs when someone asks "why did my document
-    disappear". Costs one extra write (and for exact-dedup one
-    anti-join) per dropping stage; counts stay manifest-only when off.
+    disappear". Costs one extra write per dropping stage, and for the
+    first two stages a second run of the lineage they read (the
+    ingest and Gopher survivors are not persisted); the manifest's
+    counts are the same either way.
 
     ``benchmark=None`` skips the contamination stage (recorded in the
     manifest as skipped, not silently absent); ``strata_col=None`` or
@@ -116,7 +138,6 @@ def curate(
 
     if sink not in ("parquet", "tfrecord", "avro"):
         raise ValueError(f"unknown sink: {sink!r}")
-    manifest: list[dict] = []
     cfg_all = {
         "min_words": min_words,
         "minhash": {"threshold": minhash_threshold,
@@ -132,52 +153,63 @@ def curate(
         "sink": sink,
         "keep_rejects": keep_rejects,
     }
+    # (stage, Observation or None when skipped, config, drop reasons):
+    # the manifest is built from these after the sink write, when every
+    # observed relation has run. A reason is a key for the stage's whole
+    # drop count, or a function of the observed row.
+    ledger: list[tuple] = []
+    caches: list[DataFrame] = []
 
-    cur = track_persist(docs.select(id_col, text_col, *(
+    def survivors(df, stage, config, reason):
+        """Observe a stage's survivors and persist them: from exact
+        dedup on, every survivor relation has two readers."""
+        df, obs = _observe(df)
+        ledger.append((stage, obs, config, reason))
+        caches.append(track_persist(df))
+        return caches[-1]
+
+    cur, obs = _observe(docs.select(id_col, text_col, *(
         [strata_col] if strata_col else [])))
-    n = cur.count()
-    _stage(manifest, "ingest", n, n, {"columns": cur.columns})
+    ledger.append(("ingest", obs, {"columns": cur.columns}, None))
 
     # ---- 1. Gopher quality filter: each rule's boolean is a column, so
-    # the drop-reason histogram is ONE aggregate over the failed rows
-    # (a document can fail several rules; reasons sum >= dropped).
-    scored = gopher_quality(cur, text_col=text_col,
-                            min_words=min_words, **(gopher_kwargs or {}))
-    kept = track_persist(scored.filter("gopher_pass").select(*cur.columns))
-    n_q = kept.count()
+    # the drop-reason histogram is ONE observed aggregate over the
+    # failed rows (a document can fail several rules; reasons sum >=
+    # dropped).
+    failed = ~F.col("gopher_pass")
+    scored, obs = _observe(
+        gopher_quality(cur, text_col=text_col,
+                       min_words=min_words, **(gopher_kwargs or {})),
+        *[F.count_if(failed & ~F.col(r)).alias(r) for r in GOPHER_RULES],
+        rows=F.count_if(F.col("gopher_pass")),
+    )
+    ledger.append((
+        "quality_gopher", obs,
+        {"min_words": min_words, **(gopher_kwargs or {})},
+        lambda got: {"fail_" + r.removeprefix("ok_"): int(got[r] or 0)
+                     for r in GOPHER_RULES},
+    ))
     _write_rejects(
         keep_rejects, out_dir, "quality_gopher",
-        scored.filter(~F.col("gopher_pass")).select(id_col, *GOPHER_RULES),
+        scored.filter(failed).select(id_col, *GOPHER_RULES),
     )
-    reasons_row = scored.filter(~F.col("gopher_pass")).agg(*[
-        F.sum((~F.col(r)).cast("long")).alias(r) for r in GOPHER_RULES
-    ]).collect()[0]
-    _stage(manifest, "quality_gopher", n, n_q,
-           {"min_words": min_words, **(gopher_kwargs or {})},
-           # a doc can fail several rules, so reasons sum >= dropped
-           {"fail_" + r.removeprefix("ok_"): int(reasons_row[r] or 0)
-            for r in GOPHER_RULES})
-    cur.unpersist()
-    cur, n = kept, n_q
+    cur = scored.filter("gopher_pass").select(*cur.columns)
 
     # ---- 2. exact dedup (min-id survivor per md5(text))
-    kept = track_persist(dedup.exact_dedup(cur, content_col=text_col,
-                                           key_col=id_col))
-    n_e = kept.count()
+    kept = survivors(
+        dedup.exact_dedup(cur, content_col=text_col, key_col=id_col),
+        "exact_dedup", {"key": "md5(text)"}, "exact_duplicate")
     if keep_rejects:
         h = F.md5(F.col(text_col))
-        survivors = kept.select(h.alias("_h"), F.col(id_col).alias("kept_id"))
+        kept_ids = kept.select(h.alias("_h"), F.col(id_col).alias("kept_id"))
         dropped = (
             cur.join(kept.select(id_col), id_col, "left_anti")
             .select(F.col(id_col), h.alias("_h"))
-            .join(survivors, "_h")
+            .join(kept_ids, "_h")
             .select(id_col, "kept_id")
         )
         _write_rejects(True, out_dir, "exact_dedup", dropped)
-    _stage(manifest, "exact_dedup", n, n_e, {"key": "md5(text)"},
-           {"exact_duplicate": n - n_e})
-    cur.unpersist()
-    cur, n = kept, n_e
+    cur = kept
 
     # ---- 3. MinHash-LSH near-dup dedup: banded candidate pairs →
     # connected components → keep the min-id representative per cluster
@@ -199,71 +231,66 @@ def curate(
     # anti join keyed on id; the removal set is bounded by the duplicate
     # count, so AQE broadcasts it when small — not forced, in case a
     # pathological corpus is mostly duplicates
-    kept = track_persist(
-        cur.join(removals, cur[id_col] == F.col("__rm_id"), "left_anti")
-    )
-    n_nd = kept.count()
-    _stage(manifest, "near_dup_minhash", n, n_nd,
-           cfg_all["minhash"], {"near_duplicate": n - n_nd})
-    cur.unpersist()
-    cur, n = kept, n_nd
+    cur = survivors(
+        cur.join(removals, cur[id_col] == F.col("__rm_id"), "left_anti"),
+        "near_dup_minhash", cfg_all["minhash"], "near_duplicate")
 
     # ---- 4. contamination screen vs the benchmark relation
     if benchmark is not None:
-        kept = track_persist(contamination.decontaminate(
+        kept = survivors(contamination.decontaminate(
             cur, benchmark, n=contamination_ngram,
             min_shared=contamination_min_shared,
             text_col=text_col, doc_col=id_col,
-        ))
-        n_c = kept.count()
+        ), "decontaminate", cfg_all["contamination"], "benchmark_overlap")
         _write_rejects(
             keep_rejects, out_dir, "decontaminate",
             cur.join(kept.select(id_col), id_col, "left_anti").select(id_col),
         )
-        _stage(manifest, "decontaminate", n, n_c, cfg_all["contamination"],
-               {"benchmark_overlap": n - n_c})
-        cur.unpersist()
-        cur, n = kept, n_c
+        cur = kept
     else:
-        _stage(manifest, "decontaminate", n, n, {"skipped": "no benchmark"})
+        ledger.append(("decontaminate", None, {"skipped": "no benchmark"},
+                       None))
 
     # ---- 5. temperature mixture resample over the strata column
     if strata_col and temperature > 1.0:
-        kept = track_persist(sampling.temperature_resample(
-            cur, strata_col, id_col, temperature=temperature))
-        n_t = kept.count()
+        kept = survivors(
+            sampling.temperature_resample(
+                cur, strata_col, id_col, temperature=temperature),
+            "temperature_resample",
+            {"temperature": temperature, "strata_col": strata_col},
+            "mixture_downsample")
         _write_rejects(
             keep_rejects, out_dir, "temperature_resample",
             cur.join(kept.select(id_col), id_col, "left_anti").select(id_col),
         )
-        _stage(manifest, "temperature_resample", n, n_t,
-               {"temperature": temperature, "strata_col": strata_col},
-               {"mixture_downsample": n - n_t})
-        cur.unpersist()
-        cur, n = kept, n_t
+        cur = kept
     else:
-        _stage(manifest, "temperature_resample", n, n,
-               {"skipped": "temperature<=1 or no strata_col"})
+        ledger.append(("temperature_resample", None,
+                       {"skipped": "temperature<=1 or no strata_col"}, None))
 
     # ---- 6. BPE tokenize (merge table learned on the SURVIVORS — the
     # tokenizer should see the distribution it will serve)
     merges = train_bpe(cur, text_col=text_col, num_merges=bpe_merges)
-    tokenized = bpe_encode(cur, merges, text_col=text_col)
+    # train_bpe's collect has loaded ``cur``; the earlier stage caches
+    # have no reader left (an uncache keeps loaded dependants as they are)
+    for df in caches[:-1]:
+        df.unpersist()
+    # persisted: the packing prefix kernel and the join both read it, so
+    # the merge chain runs once
+    tokenized = track_persist(bpe_encode(cur, merges, text_col=text_col))
     # ---- 7. concat-and-chunk packing by the BPE token count
     packed = pack_sequences(tokenized, chunk_tokens, text_col=text_col,
                             order_col=id_col, token_count_col="n_tok")
-    out = track_persist(
+    out, packed_obs = _observe(
         tokenized.join(packed.select(id_col, "first_chunk", "last_chunk"),
                        id_col)
-        .withColumn("shard", (F.col("first_chunk") % shards).cast("int"))
-    )
-    n_out = out.count()
-    tok_stats = out.agg(
+        .withColumn("shard", (F.col("first_chunk") % shards).cast("int")),
         F.sum("n_tok").alias("total_tokens"),
         (F.max("last_chunk") + 1).alias("n_chunks"),
-    ).collect()[0]
-    _stage(manifest, "tokenize_pack", n, n_out,
-           {"bpe_merges": len(merges), "chunk_tokens": chunk_tokens})
+    )
+    ledger.append(("tokenize_pack", packed_obs,
+                   {"bpe_merges": len(merges), "chunk_tokens": chunk_tokens},
+                   None))
 
     # ---- 8. sharded sink
     os.makedirs(out_dir, exist_ok=True)
@@ -271,7 +298,7 @@ def curate(
     sink_df = out.repartition(shards, "shard")
     if sink == "parquet":
         sink_df.write.mode("overwrite").partitionBy("shard").parquet(data_dir)
-        written = n_out
+        written = None
     elif sink == "avro":
         from swivel_spark_prep_spark.sinks import write_avro
 
@@ -280,14 +307,27 @@ def curate(
         from swivel_spark_prep_spark.sinks.tfrecord import write_tfrecord_docs
 
         written = write_tfrecord_docs(sink_df.drop("tokens"), data_dir)
-    _stage(manifest, "sink", n_out, written, {"format": sink, "path": data_dir})
+
+    manifest: list[dict] = []
+    n = None
+    for name, obs, config, reasons in ledger:
+        got = obs.get if obs is not None else {"rows": n}
+        n_in = got["rows"] if n is None else n
+        if isinstance(reasons, str):
+            reasons = {reasons: n_in - got["rows"]}
+        elif reasons is not None:
+            reasons = reasons(got)
+        _stage(manifest, name, n_in, got["rows"], config, reasons)
+        n = got["rows"]
+    written = n if written is None else written
+    _stage(manifest, "sink", n, written, {"format": sink, "path": data_dir})
 
     result = {
         "config": cfg_all,
         "stages": manifest,
         "rows_final": written,
-        "total_tokens": int(tok_stats["total_tokens"] or 0),
-        "n_chunks": int(tok_stats["n_chunks"] or 0),
+        "total_tokens": int(packed_obs.get["total_tokens"] or 0),
+        "n_chunks": int(packed_obs.get["n_chunks"] or 0),
         "bpe_merges": ["%s+%s" % m for m in merges],
         "reconciles": all(
             manifest[i]["rows_out"] == manifest[i + 1]["rows_in"]

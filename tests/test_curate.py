@@ -168,3 +168,129 @@ def test_curate_keep_rejects_reconciles(spark, tmp_path):
         for r in rej:
             assert r["kept_id"] != r["doc_id"]
     assert man["config"]["keep_rejects"] is True
+
+
+def _generated_corpus(spark, tmp_path):
+    """A few hundred seeded docs written as 3 parquet files: unique
+    stopword-bearing docs in unequal lang strata, plus planted exact
+    copies, one-word-changed near copies, short docs, '#'-heavy docs,
+    stopword-free docs and docs quoting a benchmark passage."""
+    import random
+
+    rng = random.Random(7)
+    vocab = ["".join(rng.choice("abcdefghijklmnopqrstuvwxyz")
+                     for _ in range(rng.randint(4, 7))) for _ in range(300)]
+
+    def words(k):
+        return [rng.choice(vocab) for _ in range(k)]
+
+    passages = [" ".join(words(8)) for _ in range(3)]
+    base = []
+    for i in range(300):
+        w = words(rng.randint(30, 60))
+        w[3:3] = ["the", "and"]
+        lang = "en" if i % 10 < 7 else ("fr" if i % 10 < 9 else "de")
+        base.append((i, " ".join(w), lang))
+    rows = list(base)
+    nxt = len(rows)
+    for k, (_, text, lang) in enumerate(rng.sample(base, 20)):  # exact
+        rows.append((nxt + k, text, lang))
+    nxt += 20
+    for k, (_, text, lang) in enumerate(rng.sample(base, 15)):  # near
+        rows.append((nxt + k, text.rsplit(" ", 1)[0] + " zzzz", lang))
+    nxt += 15
+    planted = (
+        [" ".join(words(2)) for _ in range(15)]  # short
+        + [" ".join(f"#{w}" for w in words(20)) + " the and" for _ in range(5)]
+        + [" ".join(words(25)) for _ in range(5)]  # no stopwords
+        + [" ".join(words(10)) + " the " + passages[k % 3] + " and "
+           + " ".join(words(10)) for k in range(10)]  # contaminated
+    )
+    for k, text in enumerate(planted):
+        rows.append((nxt + k, text, "en"))
+    path = str(tmp_path / "gen_docs")
+    spark.createDataFrame(rows, "doc_id long, text string, lang string") \
+        .repartition(3).write.parquet(path)
+    bench = spark.createDataFrame(
+        list(enumerate(passages)), "doc_id long, text string")
+    docs = spark.read.parquet(path)
+    assert len(docs.inputFiles()) >= 2
+    return docs, bench
+
+
+def _reference_counts(docs, bench, kw):
+    """Each stage's survivor count, the Gopher fail sums and the packing
+    totals, from the same operators called outside curate."""
+    from pyspark.sql import functions as F
+
+    from swivel_spark_prep_spark.cache import track_persist
+    from swivel_spark_prep_spark.curate import GOPHER_RULES
+    from swivel_spark_prep_spark.operators import contamination, dedup, sampling
+    from swivel_spark_prep_spark.operators.bpe import bpe_encode, train_bpe
+    from swivel_spark_prep_spark.operators.packing import pack_sequences
+    from swivel_spark_prep_spark.operators.textstats import gopher_quality
+
+    cur = docs.select("doc_id", "text", "lang")
+    counts = [cur.count()]
+    scored = track_persist(gopher_quality(cur, min_words=kw["min_words"]))
+    failed = scored.filter(~F.col("gopher_pass"))
+    reasons = {"fail_" + r.removeprefix("ok_"): failed.filter(~F.col(r)).count()
+               for r in GOPHER_RULES}
+    cur = track_persist(scored.filter("gopher_pass").select(*cur.columns))
+    counts.append(cur.count())
+    cur = track_persist(dedup.exact_dedup(cur))
+    counts.append(cur.count())
+    pairs = dedup.minhash_near_dups(cur, num_hashes=32, num_bands=8,
+                                    jaccard_threshold=0.8)
+    reps = dedup.fuzzy_dedup_clusters(cur, pairs).filter("is_rep")
+    cur = track_persist(cur.join(reps.select("doc_id"), "doc_id", "left_semi"))
+    counts.append(cur.count())
+    cur = track_persist(contamination.decontaminate(cur, bench))
+    counts.append(cur.count())
+    cur = track_persist(sampling.temperature_resample(cur, "lang", "doc_id"))
+    counts.append(cur.count())
+    tok = track_persist(bpe_encode(cur, train_bpe(cur, num_merges=kw["bpe_merges"])))
+    packed = pack_sequences(tok, kw["chunk_tokens"], token_count_col="n_tok")
+    counts.append(tok.join(packed.select("doc_id"), "doc_id").count())
+    (total,) = tok.agg(F.sum("n_tok")).first()
+    (chunks,) = packed.agg(F.max("last_chunk") + 1).first()
+    return counts, reasons, total, chunks
+
+
+def test_curate_observed_counts_match_operators_without_count(
+        spark, tmp_path, monkeypatch):
+    """The manifest's counts come from Observations riding on the
+    pipeline's own actions: every figure must equal a count taken by
+    calling the same operators outside curate, and curate itself must
+    call DataFrame.count zero times (collect once, in train_bpe)."""
+    docs, bench = _generated_corpus(spark, tmp_path)
+    kw = {"min_words": 5, "bpe_merges": 30, "chunk_tokens": 128}
+    calls = {"count": 0, "collect": 0}
+    cls = type(docs)
+    with monkeypatch.context() as m:
+        for name in calls:
+            def wrapped(self, *a, _orig=getattr(cls, name), _name=name, **k):
+                calls[_name] += 1
+                return _orig(self, *a, **k)
+            m.setattr(cls, name, wrapped)
+        man = curate(spark, docs, str(tmp_path / "out"), benchmark=bench,
+                     shards=3, sink="parquet", **kw)
+    assert calls == {"count": 0, "collect": 1}
+
+    counts, reasons, total, chunks = _reference_counts(docs, bench, kw)
+    stages = man["stages"]
+    assert [s["stage"] for s in stages] == [
+        "ingest", "quality_gopher", "exact_dedup", "near_dup_minhash",
+        "decontaminate", "temperature_resample", "tokenize_pack", "sink"]
+    assert [s["rows_in"] for s in stages] == [counts[0], *counts]
+    assert [s["rows_out"] for s in stages] == [*counts, counts[-1]]
+    assert stages[1]["drop_reasons"] == reasons
+    assert man["total_tokens"] == total and man["n_chunks"] == chunks
+    assert man["reconciles"] is True
+    # every planted defect reached its stage
+    dropped = {s["stage"]: s["dropped"] for s in stages}
+    assert dropped["quality_gopher"] >= 25 and dropped["exact_dedup"] == 20
+    assert dropped["near_dup_minhash"] >= 1
+    assert dropped["decontaminate"] >= 1
+    assert dropped["temperature_resample"] >= 1
+    assert reasons["fail_word_count"] >= 15 and reasons["fail_stopwords"] >= 5

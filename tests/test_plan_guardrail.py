@@ -40,3 +40,43 @@ def test_no_new_global_window_or_cartesian(name, spark, sf_dir):
         assert_plan_guardrail(name, _ALL[name](spark, sf_dir))
     finally:
         release_persisted()
+
+
+def test_guardrail_counts_ignore_foreign_persists(spark, sf_dir):
+    """The replay prefetch plans queries while other threads hold
+    persisted relations in the session's cache manager. The detectors
+    descend through InMemoryRelation, so a foreign cached subtree that
+    matches part of a query must not change its counts (ADVICE: the
+    X290 pair self-join count once moved with cache substitution)."""
+    from swivel_spark_prep_spark.catalog import load_table
+    from swivel_spark_prep_spark.plans import (
+        pair_self_join_count,
+        physical_plan,
+        replicate_explode_sizes,
+        unpartitioned_window_count,
+    )
+
+    def census():
+        df = _ALL["X290_split_leakage"](spark, sf_dir)
+        plan = physical_plan(df)
+        return plan.count("InMemoryRelation"), (
+            unpartitioned_window_count(df),
+            pair_self_join_count(df),
+            "CartesianProduct" in plan,
+            sorted(replicate_explode_sizes(df)),
+        )
+
+    release_persisted()
+    cached_alone, alone = census()
+    release_persisted()
+    docs = load_table(spark, sf_dir, "documents").persist()
+    try:
+        docs.count()
+        # X06 persists the same MinHash shingle relation X290 builds
+        _ALL["X06_minhash_near_dups"](spark, sf_dir).collect()
+        cached, counts = census()
+        assert cached > cached_alone  # the foreign caches were substituted
+        assert counts == alone
+    finally:
+        docs.unpersist()
+        release_persisted()
